@@ -1,6 +1,6 @@
 package graft
 
-import graft.config.DedupConfig
+import graft.config.{DedupConfig, ShufflePartitions}
 import graft.io.{CheckpointStore, TableIO}
 import graft.operators.{Ingest, Validate}
 import graft.pipeline.DedupPipeline
@@ -242,141 +242,158 @@ object Main {
     val outIo = TableIO.resolve(spark, output)
     val parts =
       if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+      else ShufflePartitions(spark)
     val store = checkpoint.map(new CheckpointStore(spark, _, runId))
 
     incremental match {
       case Some(newDir) =>
         val newFeat = Ingest.run(spark,
           TableIO.readLocation(spark, newDir), cfg, partitions = parts)
-        val featIo = corpusFeatures.map(TableIO.resolve(spark, _))
-        // (frozen corpus count, bucket count) of the persisted bucketed
-        // corpus_buckets table, when the state root carries one
-        var bucketState: Option[(Long, Int)] = None
-        val corpusFeat = featIo match {
-          case Some(io) if io.exists("corpus_features") =>
-            // later runs: the persisted table IS the corpus — `input` is
-            // not read at all (MainSpec proves it with a bogus input path).
-            // Fail fast if this run's feature config differs from the one
-            // the table was built with: joining across signature spaces
-            // (other bands/seed/mirrorDups) silently loses every pair.
-            if (io.exists("corpus_features_meta")) {
-              val meta = io.read("corpus_features_meta")
-              val stored = meta.select("feature_config").head().getString(0)
-              require(stored == cfg.featureConfigId,
-                s"persisted corpus_features were built with [$stored] but " +
-                  s"this run uses [${cfg.featureConfigId}] — re-featurize " +
-                  "the corpus or restore the original --set values")
-              // bucketed corpus state (state roots written before the
-              // bucketed layout existed just lack the columns and fall back
-              // to the in-memory corpus-side DAG)
-              if (meta.columns.contains("bucket_config") &&
-                  io.exists("corpus_buckets")) {
-                val r = meta
-                  .select("bucket_config", "n_corpus", "bucket_count").head()
-                require(r.getString(0) == cfg.bucketConfigId,
-                  s"persisted corpus_buckets were keyed with [${r.getString(0)}]" +
-                    s" but this run uses [${cfg.bucketConfigId}] — rebuild " +
-                    "the corpus state or restore the original --set values")
-                bucketState = Some((r.getLong(1), r.getInt(2)))
-              }
-            }
-            io.read("corpus_features")
-          case other =>
-            val f = Ingest.run(spark, TableIO.readLocation(spark, input),
-              cfg, partitions = parts)
-            other match {
-              case Some(io) =>
-                io.write(f, "corpus_features")
-                f.unpersist()
-                // downstream consumers scan the written parquet instead of
-                // holding the Ingest plan + cache
-                val feats = io.read("corpus_features")
-                // corpus half of the incremental DAG, bucketed by candidate
-                // key: every later daily run joins against this scan with
-                // ZERO corpus-side shuffle (TableIO.writeBucketed). The
-                // chunk scheme freezes at this count — recorded in the meta,
-                // validated on every read.
-                val n = feats.count()
-                io.writeBucketed(DedupPipeline.corpusStateRows(feats, n, cfg),
-                  "corpus_buckets", "key", parts)
-                io.write(spark.range(1).select(
-                  org.apache.spark.sql.functions.lit(cfg.featureConfigId)
-                    .as("feature_config"),
-                  org.apache.spark.sql.functions.lit(cfg.bucketConfigId)
-                    .as("bucket_config"),
-                  org.apache.spark.sql.functions.lit(n).as("n_corpus"),
-                  org.apache.spark.sql.functions.lit(parts)
-                    .as("bucket_count")), "corpus_features_meta")
-                bucketState = Some((n, parts))
-                feats
-              case None => f
-            }
-        }
-        outIo.write(Validate.report(newFeat), "validation")
-        def pairsDag(): DataFrame = (featIo, bucketState) match {
-          case (Some(io), Some((n, nb))) =>
-            DedupPipeline.incrementalPairsFromState(spark, newFeat,
-              corpusFeat, io.readBucketed("corpus_buckets", "key", nb), n,
-              cfg, store)
-          case _ =>
-            DedupPipeline.incrementalPairs(spark, newFeat, corpusFeat, cfg,
-              store)
-        }
-        val pairs = store match {
-          case Some(s) => s.stage("incremental_pairs")(pairsDag())
-          case None => pairsDag()
-        }
-        outIo.write(pairs, "incremental_pairs")
-        // clustering leg: fold the evidence into the existing assignment
-        // table (delta CC — the corpus is touched by two broadcast-semi
-        // scans, never re-clustered). Within-batch dups come from the batch
-        // DAG over the batch alone, so two new near-dup images land in one
-        // cluster even when neither matches the corpus. The fold consumes
-        // the WRITTEN evidence table — the candidate-join + verify DAG (the
-        // expensive half of the run) executes exactly once.
-        assignments.foreach { loc =>
-          val corpusAssign = TableIO.readLocation(spark, loc)
-          val newPairs = DedupPipeline.runFromFeatures(spark, newFeat, cfg)
-            .dupPairs.select("a", "b")
-          val res = DedupPipeline.incrementalAssignments(spark, corpusAssign,
-            outIo.read("incremental_pairs").select("a", "b"), newPairs,
-            newFeat.select(col("id").as("image_id")))
-          outIo.write(res.newAssignments, "new_assignments")
-          outIo.write(res.relabels, "relabels")
-        }
-        store.foreach(s => outIo.write(s.metrics(), "metrics"))
-        store.foreach(s => outIo.write(s.lineage(), "lineage"))
-        // merge-back AFTER the evidence is on disk: a failed run must not
-        // have half-joined the batch into the corpus. The bucketed state
-        // merges under the FROZEN scheme count (corpusStateRows doc) so
-        // tomorrow's run still joins one consistent key space; upsert (not
-        // append) so a re-crawled id's stale keys are replaced, mirroring
-        // the feature-table merge.
-        if (mergeNew)
-          featIo.foreach { io =>
-            io.upsert(newFeat, "corpus_features", Seq("id"))
-            bucketState.foreach { case (n, nb) =>
-              io.upsertBucketed(
-                DedupPipeline.corpusStateRows(newFeat, n, cfg),
-                "corpus_buckets", "key", nb, Seq("b"))
-            }
-          }
-        newFeat.unpersist()
-        // the no-persistence-root path returned Ingest.run's cached frame
-        // directly — release it (Ingest documents the caller owns the
-        // lifecycle; the Some(io) paths already swapped to the written table)
-        if (featIo.isEmpty) corpusFeat.unpersist()
+        try runIncremental(spark, input, outIo, cfg, store, parts, newFeat,
+          corpusFeatures, mergeNew, assignments)
+        finally newFeat.unpersist()
       case None =>
         val feat = Ingest.run(spark, TableIO.readLocation(spark, input), cfg,
           partitions = parts)
-        val result = DedupPipeline.runFromFeatures(spark, feat, cfg, store)
-        outIo.write(Validate.report(feat), "validation")
-        outIo.write(result.assignments, "assignments")
-        outIo.write(result.dupPairs, "dup_pairs")
-        store.foreach(s => outIo.write(s.metrics(), "metrics"))
-        store.foreach(s => outIo.write(s.lineage(), "lineage"))
-        feat.unpersist()
+        try {
+          val result = DedupPipeline.runFromFeatures(spark, feat, cfg, store)
+          try {
+            outIo.write(Validate.report(feat), "validation")
+            outIo.write(result.assignments, "assignments")
+            outIo.write(result.dupPairs, "dup_pairs")
+            store.foreach(s => outIo.write(s.metrics(), "metrics"))
+            store.foreach(s => outIo.write(s.lineage(), "lineage"))
+          } finally result.release()
+        } finally feat.unpersist()
     }
+  }
+
+  /** The `--incremental` body of [[run]], over the new batch's persisted
+    * features (released by the caller). */
+  private def runIncremental(spark: SparkSession, input: String,
+      outIo: TableIO, cfg: DedupConfig, store: Option[CheckpointStore],
+      parts: Int, newFeat: DataFrame, corpusFeatures: Option[String],
+      mergeNew: Boolean, assignments: Option[String]): Unit = {
+    val featIo = corpusFeatures.map(TableIO.resolve(spark, _))
+    // (frozen corpus count, bucket count) of the persisted bucketed
+    // corpus_buckets table, when the state root carries one
+    var bucketState: Option[(Long, Int)] = None
+    val corpusFeat = featIo match {
+      case Some(io) if io.exists("corpus_features") =>
+        // later runs: the persisted table IS the corpus — `input` is
+        // not read at all (MainSpec proves it with a bogus input path).
+        // Fail fast if this run's feature config differs from the one
+        // the table was built with: joining across signature spaces
+        // (other bands/seed/mirrorDups) silently loses every pair.
+        if (io.exists("corpus_features_meta")) {
+          val meta = io.read("corpus_features_meta")
+          val stored = meta.select("feature_config").head().getString(0)
+          require(stored == cfg.featureConfigId,
+            s"persisted corpus_features were built with [$stored] but " +
+              s"this run uses [${cfg.featureConfigId}] — re-featurize " +
+              "the corpus or restore the original --set values")
+          // bucketed corpus state (state roots written before the
+          // bucketed layout existed just lack the columns and fall back
+          // to the in-memory corpus-side DAG)
+          if (meta.columns.contains("bucket_config") &&
+              io.exists("corpus_buckets")) {
+            val r = meta
+              .select("bucket_config", "n_corpus", "bucket_count").head()
+            require(r.getString(0) == cfg.bucketConfigId,
+              s"persisted corpus_buckets were keyed with [${r.getString(0)}]" +
+                s" but this run uses [${cfg.bucketConfigId}] — rebuild " +
+                "the corpus state or restore the original --set values")
+            bucketState = Some((r.getLong(1), r.getInt(2)))
+          }
+        }
+        io.read("corpus_features")
+      case other =>
+        val f = Ingest.run(spark, TableIO.readLocation(spark, input),
+          cfg, partitions = parts)
+        other match {
+          case Some(io) =>
+            try io.write(f, "corpus_features") finally f.unpersist()
+            // downstream consumers scan the written parquet instead of
+            // holding the Ingest plan + cache
+            val feats = io.read("corpus_features")
+            // corpus half of the incremental DAG, bucketed by candidate
+            // key: every later daily run joins against this scan with
+            // ZERO corpus-side shuffle (TableIO.writeBucketed). The
+            // chunk scheme freezes at this count — recorded in the meta,
+            // validated on every read.
+            val n = feats.count()
+            io.writeBucketed(DedupPipeline.corpusStateRows(feats, n, cfg),
+              "corpus_buckets", "key", parts)
+            io.write(spark.range(1).select(
+              org.apache.spark.sql.functions.lit(cfg.featureConfigId)
+                .as("feature_config"),
+              org.apache.spark.sql.functions.lit(cfg.bucketConfigId)
+                .as("bucket_config"),
+              org.apache.spark.sql.functions.lit(n).as("n_corpus"),
+              org.apache.spark.sql.functions.lit(parts)
+                .as("bucket_count")), "corpus_features_meta")
+            bucketState = Some((n, parts))
+            feats
+          case None => f
+        }
+    }
+    // the no-persistence-root path holds Ingest.run's cached corpus frame
+    // (Ingest documents the caller owns the lifecycle; the Some(io) paths
+    // swapped to the written table)
+    try {
+      outIo.write(Validate.report(newFeat), "validation")
+      def pairsDag(): DataFrame = (featIo, bucketState) match {
+        case (Some(io), Some((n, nb))) =>
+          DedupPipeline.incrementalPairsFromState(spark, newFeat,
+            corpusFeat, io.readBucketed("corpus_buckets", "key", nb), n,
+            cfg, store)
+        case _ =>
+          DedupPipeline.incrementalPairs(spark, newFeat, corpusFeat, cfg,
+            store)
+      }
+      val pairs = store match {
+        case Some(s) => s.stage("incremental_pairs")(pairsDag())
+        case None => pairsDag()
+      }
+      outIo.write(pairs, "incremental_pairs")
+      // clustering leg: fold the evidence into the existing assignment
+      // table (delta CC — the corpus is touched by two broadcast-semi
+      // scans, never re-clustered). Within-batch dups come from the batch
+      // DAG over the batch alone, so two new near-dup images land in one
+      // cluster even when neither matches the corpus. The fold consumes
+      // the WRITTEN evidence table — the candidate-join + verify DAG (the
+      // expensive half of the run) executes exactly once.
+      assignments.foreach { loc =>
+        val corpusAssign = TableIO.readLocation(spark, loc)
+        val batch = DedupPipeline.runFromFeatures(spark, newFeat, cfg)
+        try {
+          val res = DedupPipeline.incrementalAssignments(spark, corpusAssign,
+            outIo.read("incremental_pairs").select("a", "b"),
+            batch.dupPairs.select("a", "b"),
+            newFeat.select(col("id").as("image_id")))
+          try {
+            outIo.write(res.newAssignments, "new_assignments")
+            outIo.write(res.relabels, "relabels")
+          } finally res.release()
+        } finally batch.release()
+      }
+      store.foreach(s => outIo.write(s.metrics(), "metrics"))
+      store.foreach(s => outIo.write(s.lineage(), "lineage"))
+      // merge-back AFTER the evidence is on disk: a failed run must not
+      // have half-joined the batch into the corpus. The bucketed state
+      // merges under the FROZEN scheme count (corpusStateRows doc) so
+      // tomorrow's run still joins one consistent key space; upsert (not
+      // append) so a re-crawled id's stale keys are replaced, mirroring
+      // the feature-table merge.
+      if (mergeNew)
+        featIo.foreach { io =>
+          io.upsert(newFeat, "corpus_features", Seq("id"))
+          bucketState.foreach { case (n, nb) =>
+            io.upsertBucketed(
+              DedupPipeline.corpusStateRows(newFeat, n, cfg),
+              "corpus_buckets", "key", nb, Seq("b"))
+          }
+        }
+    } finally if (featIo.isEmpty) corpusFeat.unpersist()
   }
 }

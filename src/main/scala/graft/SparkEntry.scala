@@ -79,8 +79,9 @@ object SparkEntry {
     * (BASELINE.json north rule); returns cluster assignments. */
   def entry(spark: SparkSession): DataFrame = {
     val images = ImageGen.generate(spark, bases = 40, seed = 42L)
-    DedupPipeline.run(spark, images.toDF(), DedupConfig.default)
-      .assignments.orderBy("image_id")
+    val res = DedupPipeline.run(spark, images.toDF(), DedupConfig.default)
+    res.release()
+    res.assignments.orderBy("image_id")
   }
 
   /** Cache lifecycle across a long drive — investigated in round 6 and
@@ -343,8 +344,9 @@ object SparkEntry {
       // flagship synthetic image dedup (no DuckDB oracle — golden-tested in
       // ImagePipelineSpec against the brute-force oracle + ground truth)
       val images = ImageGen.generate(s, bases = 60, seed = 42L)
-      DedupPipeline.run(s, images.toDF(), DedupConfig.default)
-        .assignments.orderBy("image_id")
+      val res = DedupPipeline.run(s, images.toDF(), DedupConfig.default)
+      res.release()
+      res.assignments.orderBy("image_id")
     }),
 
     "q24_multimodal_decode" -> ((s, _) => {

@@ -465,6 +465,24 @@ case class CharEntropy(child: Expression)
     copy(child = newChild)
 }
 
+/** Single-pass text normalization (see [[HashKernels.normalizeText]]) —
+  * value-identical to the lower/regexp_replace/trim chain it replaced in
+  * `graft.functions.normalize_text` (ExpressionsSpec pins the equivalence).
+  * Non-string inputs are implicitly cast like `lower()`'s. */
+case class NormalizeText(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = StringType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "normalize_text"
+  override protected def nullSafeEval(input: Any): Any =
+    HashKernels.normalizeText(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.normalizeText($c)")
+  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
+    copy(child = newChild)
+}
+
 /** Single-pass stopword-density ratio (see [[HashKernels.stopwordRatio]]) —
   * value-identical to the normalize/regexp_count chain it replaced in
   * `graft.functions.stopword_ratio`, without the two document rewrites and

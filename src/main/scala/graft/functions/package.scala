@@ -138,8 +138,13 @@ package object functions {
   // --- normalization / tokenization (reference parsers/base.py:21-32,
   // preprocess/char_filter.py:4-14 — grafted to caption text) -------------
 
-  /** Lowercase, strip non [a-z0-9 ] chars, collapse whitespace, trim. */
-  def normalize_text(c: Column): Column =
+  /** Lowercase, strip non [a-z0-9 ] chars, collapse whitespace, trim — one
+    * codegen'd pass ([[NormalizeText]]). */
+  def normalize_text(c: Column): Column = column(NormalizeText(expression(c)))
+
+  /** The expression chain [[normalize_text]] replaced: the reference its
+    * equivalence spec compares against. */
+  private[graft] def normalize_text_regex(c: Column): Column =
     F.trim(F.regexp_replace(
       F.regexp_replace(F.lower(c), "[^a-z0-9 ]", " "), " +", " "))
 

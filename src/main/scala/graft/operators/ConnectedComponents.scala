@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.config.ShufflePartitions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Connected components over an undirected edge list, as an iterative
@@ -135,28 +137,29 @@ object ConnectedComponents {
       localThreshold: Long = 2000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
+    val canon = edges
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .where(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"))
+      .distinct()
     // the loop is many tiny stages: AQE's per-stage re-planning jobs cost
     // more latency than they save here — disable for the loop's duration
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val canon = edges
-        .select(col("src").cast("long"), col("dst").cast("long"))
-        .where(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("src"),
-          greatest(col("src"), col("dst")).as("dst"))
-        .distinct()
-        .localCheckpoint(false)
-
+      // cached, not checkpointed: every result below reads the driver-side
+      // solution or checkpointed labels, so the cache is released on return
+      canon.persist(StorageLevel.MEMORY_AND_DISK)
       if (localThreshold > 0) {
-        // one count job (doubles as the checkpoint materializer — the whole
+        // one count job (doubles as the cache materializer — the whole
         // upstream candidate/verify DAG runs exactly once, fully parallel)
         val edgeCount = canon.count()
         if (edgeCount <= localThreshold) {
           val solved = localSolve(canon.as[(Long, Long)].collect())
           return spark.createDataset(
             spark.sparkContext.parallelize(solved.toIndexedSeq,
-              math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt / 4)))
+              math.max(1, ShufflePartitions(spark) / 4)))
             .toDF("id", "component")
         }
       }
@@ -226,6 +229,7 @@ object ConnectedComponents {
         .select(labels("id"),
           coalesce(contracted("component"), labels("component")).as("component"))
     } finally {
+      canon.unpersist()
       spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
     }
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.config.ShufflePartitions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -76,7 +77,7 @@ object OrderedScan {
   }
 
   private def shufflePartitions(df: DataFrame): Int =
-    df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    ShufflePartitions(df.sparkSession)
 
   /**
    * Cumulative sums over a global ordering, fully distributed.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.config.ShufflePartitions
 import org.apache.spark.sql.{Column, DataFrame}
 
 /**
@@ -30,8 +31,7 @@ object Spread {
 
   def partitions(df: DataFrame): Int = {
     val s = df.sparkSession
-    math.max(s.sparkContext.defaultParallelism,
-      s.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+    math.max(s.sparkContext.defaultParallelism, ShufflePartitions(s))
   }
 
   /** Hash-repartition on the next aggregation's keys, explicit count. */

@@ -5,6 +5,7 @@ import graft.functions._
 import graft.io.CheckpointStore
 import graft.operators.{CandidateGen, ConnectedComponents, SkewStats, VerifyStage}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -100,14 +101,24 @@ object DedupPipeline {
   }
 
   /** Full run. When `checkpoint` is given, the verified-pairs stage is
-    * persisted and resumable (reference snapshot/tail-replay semantics). */
+    * persisted and resumable (reference snapshot/tail-replay semantics).
+    * Eager and caller-released like [[runFromFeatures]]. */
   def run(spark: SparkSession, images: DataFrame, cfg: DedupConfig,
       checkpoint: Option[CheckpointStore] = None): DedupResult =
     runFromFeatures(spark, features(images, cfg), cfg, checkpoint)
 
   /** Run from a pre-computed [[features]] frame (e.g. the fused
     * [[graft.operators.Ingest]] pass that validates payloads and extracts
-    * features in one scan). Persists the frame if the caller has not. */
+    * features in one scan). Persists the frame if the caller has not.
+    *
+    * Candidate generation and verify run exactly once, into one persisted
+    * evidence frame that both [[DedupResult.assignments]] and
+    * [[DedupResult.dupPairs]] read. Eager driver actions before it returns:
+    * the features count (sizes the SimHash chunk scheme), the evidence
+    * materialization (with `checkpoint`, after the staged `bucket_histogram`,
+    * `cap_loss` and `verified_pairs` writes) and [[ConnectedComponents.run]].
+    * The caller owns the evidence as it owns the features: call
+    * [[DedupResult.release]] once the outputs are consumed. */
   def runFromFeatures(spark: SparkSession, featuresDf: DataFrame, cfg: DedupConfig,
       checkpoint: Option[CheckpointStore] = None): DedupResult = {
 
@@ -167,76 +178,89 @@ object DedupPipeline {
             cfg.lcsMin - cfg.anchorK + 1, cfg.seed)).as("key"))
         capBuckets.union(chunkBuckets).union(anchorBuckets)
       } else capBuckets.union(chunkBuckets)
-    // checkpointed runs persist the bucket-occupancy profile (resumable like
-    // any stage): the artifact an operator reads to re-judge maxBucketSize /
-    // saltOversized for the NEXT run of a corpus whose skew just surprised
-    // this one. The bucket rows get cached across the histogram and the
-    // candidate join (both aggregate them by key), so the profile costs one
-    // aggregation over the cache, not a recompute of the collapse + explode
-    // derivation; unpersisted below once the verify stage has materialized.
-    val bucketRows =
-      if (checkpoint.isDefined) buckets.persist(StorageLevel.MEMORY_AND_DISK)
-      else buckets
-    checkpoint.foreach(_.stage("bucket_histogram") {
-      SkewStats.bucketHistogram(bucketRows)
-    })
-    // ... and the run's recall posture: how much candidate volume the cap
-    // dropped (degrade mode) or spread (salted) — the "no silent caps"
-    // metric, one more aggregation over the same cache
-    checkpoint.foreach(_.stage("cap_loss") {
-      CandidateGen.capLossReport(bucketRows, cfg.maxBucketSize,
-        saltOversized = cfg.saltOversized)
-    })
-    val candidates = CandidateGen.pairsFromBuckets(bucketRows, cfg.maxBucketSize,
-      saltOversized = cfg.saltOversized)
+    // The bucket rows are cached already partitioned by key: the count
+    // aggregate and the band self-join in pairsFromBuckets (and, on
+    // checkpointed runs, the occupancy profile and the cap-loss report)
+    // all group or join on key, so they read the cache without another
+    // exchange. Released once the evidence below has materialized.
+    val bucketRows = buckets.repartition(col("key"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val evidence = try {
+      // checkpointed runs persist the bucket-occupancy profile (resumable
+      // like any stage): the artifact an operator reads to re-judge
+      // maxBucketSize / saltOversized for the NEXT run of a corpus whose
+      // skew just surprised this one
+      checkpoint.foreach(_.stage("bucket_histogram") {
+        SkewStats.bucketHistogram(bucketRows)
+      })
+      // ... and the run's recall posture: how much candidate volume the cap
+      // dropped (degrade mode) or spread (salted) — the "no silent caps"
+      // metric
+      checkpoint.foreach(_.stage("cap_loss") {
+        CandidateGen.capLossReport(bucketRows, cfg.maxBucketSize,
+          saltOversized = cfg.saltOversized)
+      })
+      val candidates = CandidateGen.pairsFromBuckets(bucketRows,
+        cfg.maxBucketSize, saltOversized = cfg.saltOversized)
 
-    // --- verify (full OR rule on every candidate) ---------------------------
-    val featByNid = feat.select(
-      (Seq(col("nid").as("id"), col("shingles"), col("simhash"),
-        col("norm_text")) ++
-        (if (cfg.mirrorDups) Seq(col("simhash_m")) else Nil)): _*)
-    // not persisted: the CC loop localCheckpoints its canonical edge set
-    // immediately, so the assignment path reads this exactly once; dupPairs
-    // consumers that need it materialized pass a CheckpointStore (staged)
-    val verified = staged("verified_pairs") {
-      VerifyStage.verify(candidates, featByNid, cfg).where(col("is_dup"))
+      // --- verify (full OR rule on every candidate) -------------------------
+      val featByNid = feat.select(
+        (Seq(col("nid").as("id"), col("shingles"), col("simhash"),
+          col("norm_text")) ++
+          (if (cfg.mirrorDups) Seq(col("simhash_m")) else Nil)): _*)
+      // read once, by the evidence materialization below (with a
+      // checkpoint, from the staged verified_pairs files)
+      val verified = staged("verified_pairs") {
+        VerifyStage.verify(candidates, featByNid, cfg).where(col("is_dup"))
+      }
+
+      // --- duplicate-pair evidence (representative level + exact stars) -----
+      // node ids for connected components next to the image ids dupPairs
+      // publishes: one pair of nid -> id joins over all three edge kinds
+      def idOf(side: String) =
+        feat.select(col("nid").as(side), col("id").as(s"__$side"))
+      materialize(
+        verified.select(col("a").as("src"), col("b").as("dst"),
+            col("jaccard"), col("hamming"))
+          .union(capStars.select(col("src"), col("dst"),
+            lit(1.0).as("jaccard"), lit(null).cast("int").as("hamming")))
+          .union(phStars.select(col("src"), col("dst"),
+            lit(null).cast("double").as("jaccard"), lit(0).as("hamming")))
+          .join(idOf("src"), "src")
+          .join(idOf("dst"), "dst")
+          .select(col("src"), col("dst"),
+            least(col("__src"), col("__dst")).as("a"),
+            greatest(col("__src"), col("__dst")).as("b"),
+            col("jaccard"), col("hamming")))
+    } finally bucketRows.unpersist()
+
+    try {
+      // --- clustering --------------------------------------------------------
+      val cc = ConnectedComponents.run(evidence.select("src", "dst"))
+
+      val assigned = feat.select(col("id").as("image_id"), col("nid"))
+        .join(cc, feat("nid") === cc("id"), "left")
+        .select(col("image_id"), coalesce(col("component"), col("nid")).as("comp"))
+
+      // Deterministic cluster label: hash of the lexicographically smallest
+      // member id (content-derived, independent of nid assignment order).
+      val labels = assigned.groupBy("comp")
+        .agg(min("image_id").as("root_image"))
+        .select(col("comp"), xxhash64(col("root_image")).as("cluster_id"))
+      val assignments = assigned.join(labels, "comp")
+        .select("image_id", "cluster_id")
+
+      DedupResult(feat, evidence, assignments)
+    } catch {
+      case e: Throwable => evidence.unpersist(); throw e
     }
-    // with a checkpoint, staged() has materialized verified_pairs to
-    // storage, so nothing downstream can re-demand the bucket rows
-    checkpoint.foreach(_ => bucketRows.unpersist())
+  }
 
-    // --- clustering ----------------------------------------------------------
-    val edges = verified.select(col("a").as("src"), col("b").as("dst"))
-      .union(capStars).union(phStars)
-    val cc = ConnectedComponents.run(edges)
-
-    val assigned = feat.select(col("id").as("image_id"), col("nid"))
-      .join(cc, feat("nid") === cc("id"), "left")
-      .select(col("image_id"), coalesce(col("component"), col("nid")).as("comp"))
-
-    // Deterministic cluster label: hash of the lexicographically smallest
-    // member id (content-derived, independent of nid assignment order).
-    val labels = assigned.groupBy("comp")
-      .agg(min("image_id").as("root_image"))
-      .select(col("comp"), xxhash64(col("root_image")).as("cluster_id"))
-    val assignments = assigned.join(labels, "comp")
-      .select("image_id", "cluster_id")
-
-    // --- duplicate-pair evidence (representative level + exact stars) -------
-    val nidToId = feat.select(col("nid"), col("id"))
-    def back(df: DataFrame, l: String, r: String): DataFrame =
-      df.join(nidToId.withColumnRenamed("nid", l).withColumnRenamed("id", "__a"), l)
-        .join(nidToId.withColumnRenamed("nid", r).withColumnRenamed("id", "__b"), r)
-        .select(least(col("__a"), col("__b")).as("a"),
-          greatest(col("__a"), col("__b")).as("b"),
-          col("jaccard"), col("hamming"))
-    val dupPairs = back(verified, "a", "b")
-      .union(back(capStars.withColumn("jaccard", lit(1.0))
-        .withColumn("hamming", lit(null).cast("int")), "src", "dst"))
-      .union(back(phStars.withColumn("jaccard", lit(null).cast("double"))
-        .withColumn("hamming", lit(0)), "src", "dst"))
-
-    DedupResult(feat, dupPairs, assignments)
+  /** Persist and count; a failed count releases the cache entry again. */
+  private def materialize(df: DataFrame): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try { p.count(); p }
+    catch { case e: Throwable => p.unpersist(); throw e }
   }
 
   /**
@@ -472,7 +496,7 @@ object DedupPipeline {
       .join(labels, Seq("component"))
       .where(col("id") =!= col("new_cluster_id"))
       .select(col("id").as("cluster_id"), col("new_cluster_id"))
-    IncrementalAssignments(newAssignments, relabels)
+    IncrementalAssignments(newAssignments, relabels, Seq(touchedB, cands))
   }
 
   /** Corpus-wide assignment view after [[incrementalAssignments]]: one
@@ -491,22 +515,48 @@ object DedupPipeline {
   *                       clusters whose display label moved — batch-sized,
   *                       meant for [[DedupPipeline.applyClusterRelabels]] or
   *                       a catalog MERGE INTO
+  * @param checkpoints    the batch-sized local checkpoints both outputs read
+  *                       (touched corpus rows, component candidates); the
+  *                       caller frees them with [[release]] once both are
+  *                       consumed
   */
 final case class IncrementalAssignments(
     newAssignments: DataFrame,
-    relabels: DataFrame)
+    relabels: DataFrame,
+    checkpoints: Seq[DataFrame]) {
 
-/** @param features    per-row signatures (persisted)
-  * @param dupPairs    verified duplicate pairs with evidence (rep pairs +
-  *                    exact-identity star edges; cluster co-membership is the
-  *                    full transitive pair set). NOT persisted: a caller that
-  *                    materializes both `assignments` and `dupPairs` without a
-  *                    CheckpointStore recomputes the candidate+verify join for
-  *                    the second action (deterministic — features are cached —
-  *                    so this costs time, not correctness); pass a
-  *                    CheckpointStore to stage `verified_pairs` once
+  /** Drop the checkpoint blocks: `unpersist` on a frame reaches cached plans
+    * only, so this unpersists the checkpointed RDD under each plan. */
+  def release(): Unit = checkpoints.foreach(_.queryExecution.logical.foreach {
+    case r: LogicalRDD => r.rdd.unpersist()
+    case _ =>
+  })
+}
+
+/** Result of [[DedupPipeline.runFromFeatures]].
+  *
+  * @param features    per-row signatures, persisted: the caller's frame, or
+  *                    persisted by the run when it was not; the caller
+  *                    unpersists them
+  * @param evidence    the persisted evidence frame, one row per duplicate
+  *                    pair: (src, dst) node ids and (a, b) image ids with
+  *                    jaccard / hamming — representative pairs that passed
+  *                    verify plus exact-identity star edges. Connected
+  *                    components ran on it; the caller owns it and frees
+  *                    it with [[release]]
   * @param assignments final (image_id, cluster_id) */
 final case class DedupResult(
     features: DataFrame,
-    dupPairs: DataFrame,
-    assignments: DataFrame)
+    evidence: DataFrame,
+    assignments: DataFrame) {
+
+  /** Verified duplicate pairs (a, b, jaccard, hamming): representative pairs
+    * plus exact-identity stars (cluster co-membership is the full transitive
+    * pair set). A projection of the persisted [[evidence]], so reading it
+    * after `assignments` runs no candidate generation, verify or shuffle. */
+  def dupPairs: DataFrame = evidence.select("a", "b", "jaccard", "hamming")
+
+  /** Unpersist the evidence once `dupPairs` is consumed. `assignments`
+    * stay readable: connected components checkpointed its labels. */
+  def release(): Unit = evidence.unpersist()
+}

@@ -104,10 +104,10 @@ object StreamingIncremental {
         s"validation_$batchId")
       if (!state.exists("corpus_features")) {
         val result = DedupPipeline.runFromFeatures(spark, newFeat, cfg)
-        out.write(result.dupPairs
-          .select(col("a"), col("b"), col("jaccard"), col("hamming")),
-          s"incremental_pairs_$batchId")
-        state.write(result.assignments, "assignments")
+        try {
+          out.write(result.dupPairs, s"incremental_pairs_$batchId")
+          state.write(result.assignments, "assignments")
+        } finally result.release()
         state.write(newFeat, "corpus_features")
         state.write(spark.range(1).select(lit(cfg.featureConfigId)
           .as("feature_config")), "corpus_features_meta")
@@ -128,19 +128,22 @@ object StreamingIncremental {
         // the fold consumes the WRITTEN table — the evidence join runs once
         val crossSaved = out.read(s"incremental_pairs_$batchId")
         val within = DedupPipeline.runFromFeatures(spark, newFeat, cfg)
-          .dupPairs.select("a", "b")
-        val res = DedupPipeline.incrementalAssignments(spark,
-          state.read("assignments"), crossSaved.select("a", "b"), within,
-          newFeat.select(col("id").as("image_id")))
-        // only the touched corpus rows rewrite: semi-filter by the relabel
-        // map, apply, and upsert together with the batch's new rows
-        val touched = DedupPipeline.applyClusterRelabels(
-          state.read("assignments").join(
-            broadcast(res.relabels.select("cluster_id")),
-            Seq("cluster_id"), "left_semi"),
-          res.relabels)
-        state.upsert(touched.unionByName(res.newAssignments),
-          "assignments", Seq("image_id"))
+        try {
+          val res = DedupPipeline.incrementalAssignments(spark,
+            state.read("assignments"), crossSaved.select("a", "b"),
+            within.dupPairs.select("a", "b"),
+            newFeat.select(col("id").as("image_id")))
+          // only the touched corpus rows rewrite: semi-filter by the relabel
+          // map, apply, and upsert together with the batch's new rows
+          val touched = DedupPipeline.applyClusterRelabels(
+            state.read("assignments").join(
+              broadcast(res.relabels.select("cluster_id")),
+              Seq("cluster_id"), "left_semi"),
+            res.relabels)
+          try state.upsert(touched.unionByName(res.newAssignments),
+            "assignments", Seq("image_id"))
+          finally res.release()
+        } finally within.release()
         state.upsert(newFeat, "corpus_features", Seq("id"))
       }
       state.write(spark.range(1).select(lit(batchId).as("batch_id")), marker)

@@ -56,6 +56,7 @@ object DiagBench {
       t(s"full pipeline round $round") {
         val res = DedupPipeline.run(spark, images, DedupConfig.default)
         res.assignments.write.mode("overwrite").format("noop").save()
+        res.release()
         res.features.unpersist()
       }
       dumpAgg(s"round $round")

@@ -49,6 +49,7 @@ object JobDiag {
       val t0 = System.nanoTime()
       val res = DedupPipeline.run(spark, images, DedupConfig.default)
       res.assignments.write.mode("overwrite").format("noop").save()
+      res.release()
       res.features.unpersist()
       println(f"[round $r] total=${(System.nanoTime() - t0) / 1e9}%.2f s")
     }

@@ -48,6 +48,7 @@ object ProbeBench {
     val td = timed {
       val res = DedupPipeline.runFromFeatures(spark, feat, DedupConfig.default)
       materialize(res.assignments)
+      res.release()
     }
     feat.unpersist()
     (tv, td)

@@ -2,6 +2,8 @@ package graft
 
 import graft.config.DedupConfig
 import graft.synth.ImageGen
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.apache.spark.sql.{CacheEntries, DataFrame}
 import org.apache.spark.sql.functions._
 
 class MainSpec extends SparkSpec {
@@ -320,6 +322,125 @@ class MainSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Main.parse(List("--stream"), Main.Args())
     }
+  }
+
+  /** (row count, bit_xor of xxhash64 over every column): order-free and
+    * exact over the row multiset — the count catches a row written twice,
+    * which cancels out of the xor. */
+  private def digest(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), coalesce(
+      expr(s"bit_xor(xxhash64(${df.columns.mkString(", ")}))"), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  test("batch outputs match the pinned digests: default, mirrorDups, anchor family") {
+    val in = "/tmp/graft_main_spec/pin_in"
+    rmrf(in)
+    ImageGen.generate(spark, bases = 25, seed = 42L)
+      .write.mode("overwrite").parquet(in)
+    // (assignments, dup_pairs) digests recorded from the DAG that ran
+    // candidate generation and verify once per output table; the single
+    // pass over one materialized evidence frame must keep the row sets
+    val pinned = Map(
+      "default" -> ((59L, -648351263444652963L), (81L, 1930501024873610945L)),
+      "mirrorDups" -> ((59L, -648351263444652963L), (81L, 1390719631585742737L)),
+      "anchors" -> ((59L, 5695160826468498524L), (175L, 7025827540450876894L)))
+    val got = Seq(
+      "default" -> Map.empty[String, String],
+      "mirrorDups" -> Map("mirrorDups" -> "true"),
+      "anchors" -> Map("lcsMin" -> "16", "anchorK" -> "8")).map { case (name, sets) =>
+      val out = s"/tmp/graft_main_spec/pin_out_$name"
+      rmrf(out)
+      Main.run(spark, in, out, Main.configOf(sets), partitions = 4)
+      name -> (digest(spark.read.parquet(s"$out/assignments.parquet")),
+        digest(spark.read.parquet(s"$out/dup_pairs.parquet")))
+    }.toMap
+    assert(got == pinned, s"digests moved: $got")
+    // a checkpointed run reads verified_pairs back from its stage files
+    val (out, ck) = ("/tmp/graft_main_spec/pin_out_ck", "/tmp/graft_main_spec/pin_ck")
+    Seq(out, ck).foreach(rmrf)
+    Main.run(spark, in, out, DedupConfig.default, Some(ck), "pin", partitions = 4)
+    assert((digest(spark.read.parquet(s"$out/assignments.parquet")),
+      digest(spark.read.parquet(s"$out/dup_pairs.parquet"))) == pinned("default"))
+  }
+
+  /** Shuffle bytes written by each stage of the jobs `body` runs, read off a
+    * listener once every job of the body's job group has reported its end. */
+  private def stageShuffleWrites(body: => Unit): Seq[Long] = {
+    val sc = spark.sparkContext
+    val group = s"main-spec-${System.nanoTime()}"
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        written.add(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "stageShuffleWrites")
+      try body finally sc.clearJobGroup()
+      val jobs = sc.statusTracker.getJobIdsForGroup(group)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.forall(ended.contains) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.nonEmpty && jobs.forall(ended.contains),
+        "listener missed a job end")
+    } finally sc.removeSparkListener(listener)
+    written.toArray.toSeq.map(_.asInstanceOf[Long])
+  }
+
+  test("dup_pairs after assignments reads the materialized evidence: no shuffle stage") {
+    val cfg = DedupConfig.default
+    val feat = operators.Ingest.run(spark,
+      ImageGen.generate(spark, bases = 25, seed = 42L).toDF(), cfg, partitions = 4)
+    val res = pipeline.DedupPipeline.runFromFeatures(spark, feat, cfg)
+    try {
+      def noop(df: DataFrame): Unit =
+        df.write.mode("overwrite").format("noop").save()
+      noop(res.assignments)
+      val writes = stageShuffleWrites(noop(res.dupPairs))
+      assert(writes.nonEmpty, "the dup_pairs write ran no stage")
+      assert(writes.forall(_ == 0L),
+        s"dup_pairs ran shuffle stages (bytes per stage: $writes)")
+    } finally {
+      res.release()
+      feat.unpersist()
+    }
+  }
+
+  test("Main.run, batch and incremental, leaves no cached plan or RDD behind, even when a write throws") {
+    val in = "/tmp/graft_main_spec/leak_in"
+    val nb = "/tmp/graft_main_spec/leak_new"
+    val outB = "/tmp/graft_main_spec/leak_out_batch"
+    val outI = "/tmp/graft_main_spec/leak_out_inc"
+    Seq(in, nb, outB, outI).foreach(rmrf)
+    val corpus = ImageGen.generate(spark, bases = 12, seed = 42L).toDF()
+    corpus.write.mode("overwrite").parquet(in)
+    corpus.limit(4).withColumn("image_id", concat(lit("new_"), col("image_id")))
+      .write.mode("overwrite").parquet(nb)
+    val sc = spark.sparkContext
+    val entriesBefore = CacheEntries.count(spark)
+    val rddsBefore = sc.getPersistentRDDs.keySet
+
+    Main.run(spark, in, outB, DedupConfig.default, partitions = 4)
+    Main.run(spark, in, outI, DedupConfig.default, partitions = 4,
+      incremental = Some(nb), assignments = Some(s"$outB/assignments.parquet"))
+    // an output root below a regular file: every table write throws, after
+    // the features (and, in batch mode, the evidence) are cached
+    val blocked = "/tmp/graft_main_spec/leak_blocked"
+    rmrf(blocked)
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(blocked))
+    intercept[Exception] {
+      Main.run(spark, in, s"$blocked/out", DedupConfig.default, partitions = 4)
+    }
+    intercept[Exception] {
+      Main.run(spark, in, s"$blocked/out", DedupConfig.default, partitions = 4,
+        incremental = Some(nb))
+    }
+    assert(CacheEntries.count(spark) == entriesBefore, "cached plans left behind")
+    val leaked = sc.getPersistentRDDs.keySet -- rddsBefore
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
   }
 
   test("parse rejects a flag where a value is expected") {

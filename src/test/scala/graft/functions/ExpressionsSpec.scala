@@ -167,6 +167,44 @@ class ExpressionsSpec extends SparkSpec {
     assert(r.getDouble(3) >= 0.0 && r.getDouble(3) <= 1.0)
   }
 
+  test("normalize_text kernel == lower/regexp_replace/trim chain") {
+    val edge = Seq(
+      "  The RED,   fox!! ", "", " ", "\t\n a \n b\t", "!!! ,,, ;;;",
+      "9to5 at7 7AT", "a-b the,fox (and) [of]", "ABC xyz 019",
+      "café the naïve İstanbul", // multi-byte + dotted capital I
+      "Kelvin", // KELVIN SIGN lowers to an ASCII k
+      "ΟΔΟΣ Σ σς", // final sigma
+      "ǅ Straße ＡＢＣ", // titlecase digraph, sharp s, fullwidth
+      "a😀b 😀", // surrogate pairs
+      "x" * 40 + "  " + "Y" * 3)
+    val rnd = new scala.util.Random(HashKernels.mix64(17L))
+    val pool = "aZ09 ,.-\téÉİıKΣßＡ".toCharArray
+    val generated = Seq.fill(500)(
+      new String(Array.fill(rnd.nextInt(24))(pool(rnd.nextInt(pool.length)))))
+    val cases = edge ++ generated
+    val df = cases.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text")
+    val got = df.select($"id", normalize_text($"text").as("k"),
+        normalize_text_regex($"text").as("r"))
+      .as[(Long, String, String)].collect()
+    assert(got.length == cases.length)
+    got.foreach { case (i, k, r) =>
+      assert(k == r, s"case $i '${cases(i.toInt)}': kernel '$k' != chain '$r'")
+    }
+    // null stays null; invalid UTF-8 separates like any non-token code
+    // point; non-string input is cast like lower()'s
+    val odd = spark.range(1).select(
+      normalize_text(lit(null).cast("string")).as("k0"),
+      normalize_text_regex(lit(null).cast("string")).as("r0"),
+      normalize_text(unhex(lit("61FF4262")).cast("string")).as("k1"),
+      normalize_text_regex(unhex(lit("61FF4262")).cast("string")).as("r1"),
+      normalize_text(lit(-12.5)).as("k2"),
+      normalize_text_regex(lit(-12.5)).as("r2")).head()
+    assert(odd.isNullAt(0) && odd.isNullAt(1))
+    assert(odd.getString(2) == odd.getString(3), s"${odd.getString(2)} != ${odd.getString(3)}")
+    assert(odd.getString(4) == "12 5" && odd.getString(5) == "12 5")
+  }
+
   test("stopword_ratio kernel == regex chain on edge and generated inputs") {
     val cases = Seq(
       "the quick brown fox", // 1 stopword / 4 tokens
